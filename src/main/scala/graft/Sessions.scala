@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.NioLocalFileSystem
+
 /** One place for the session config every entry point (Verify, Bench,
   * tests) must share so results are reproducible and oracle-comparable.
   */
@@ -40,12 +42,10 @@ object Sessions {
       .config("spark.sql.catalog.loglake.warehouse", "/tmp/graft_loglake_warehouse")
       // Managed tables (bucketed-join demos/tests) go to tmp, not cwd.
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      // Fork-free local chmod: without libhadoop, RawLocalFileSystem
-      // forks /bin/chmod per created file/dir (hundreds of forks per
-      // write-heavy query); NioLocalFileSystem does the same permission
-      // change in-process (graft.sources.NioLocalFileSystem).
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.NioLocalFileSystem")
+      // Fork-free `file:` for both Hadoop client APIs (FileSystem and
+      // FileContext, which streaming checkpoints use); see
+      // graft.sources.NioLocalFileSystem.
+      .config(NioLocalFileSystem.impls.map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
       .config("spark.ui.enabled", "false")
 
   /** A sibling session sharing the SparkContext (and cached data) but with

@@ -1331,24 +1331,18 @@ final class LogLakeSink(dir: String, statsCols: Seq[String],
     // write (the foreachBatch/DeltaSink move)
     val fresh = GraftBridge.truncateLineage(data)
     val spark = fresh.sparkSession
-    val dbg = sys.env.contains("GRAFT_SINK_DEBUG")
-    def t[A](tag: String)(f: => A): A =
-      if (!dbg) f else {
-        val t0 = System.nanoTime(); val r = f
-        Console.err.println(f"[sink] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
     val txn = s"sink-${writerId(spark)}:$batchId"
     val exists = LogLake.currentVersion(dir) > 0L
     mode match {
       case m if m == OutputMode.Complete() =>
-        if (exists) t("overwrite")(LogLake.overwrite(spark, dir, fresh, statsCols, txn))
-        else t("create")(LogLake.create(spark, dir, fresh, statsCols, txn))
+        if (exists) LogLake.overwrite(spark, dir, fresh, statsCols, txn)
+        else LogLake.create(spark, dir, fresh, statsCols, txn)
       case _ =>
-        if (!exists) t("create")(LogLake.create(spark, dir, fresh, statsCols, txn))
+        if (!exists) LogLake.create(spark, dir, fresh, statsCols, txn)
         // an empty epoch stages zero files and append() skips the
         // commit itself — no pre-emptive isEmpty, which would run the
         // epoch's plan twice
-        else t("append")(LogLake.append(spark, dir, fresh, statsCols, txn))
+        else LogLake.append(spark, dir, fresh, statsCols, txn)
     }
   }
 

@@ -1,26 +1,50 @@
 package graft.sources
 
+import java.net.URI
 import java.nio.file.attribute.PosixFilePermission
 import java.nio.file.attribute.PosixFilePermission._
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Local filesystem whose chmod is an in-process java.nio call.
+/** Local filesystem whose per-file metadata calls stay in-process.
   *
-  * Without libhadoop (this environment ships none), Hadoop's
-  * `RawLocalFileSystem.setPermission` forks `/bin/chmod` PER CALL —
-  * measured 283 subprocess forks in one loglake-heavy query (q141:
-  * every staged part, checkpoint part, manifest and directory pays
-  * one), each a fork+exec out of a multi-GB-RSS JVM. `setPermission`
-  * is the ONLY exec site in hadoop 3.4.2's RawLocalFileSystem (both
-  * the mkdirs-with-mode and create-with-permission paths route through
-  * it), so overriding just it removes every per-file fork while
-  * preserving semantics: the same 9 permission bits are applied, via
-  * `Files.setPosixFilePermissions`. Bits NIO cannot express (sticky/
-  * setuid/setgid) fall back to the parent's shell path — loglake never
-  * sets them, so the fallback is dead in practice but keeps the
-  * override exactly as capable as what it replaces.
+  * When libhadoop's native IO is not loaded, hadoop 3.4.2's
+  * RawLocalFileSystem forks a subprocess at three sites, each a
+  * fork+exec out of a multi-GB-RSS JVM:
+  *  - `setPermission` forks `chmod` per call — both the mkdirs-with-mode
+  *    and the create-with-permission paths route through it, so every
+  *    staged part, checkpoint part, manifest and directory paid one
+  *    (283 forks in one loglake-heavy query, q141);
+  *  - `getFileLinkStatus` forks `readlink` (`FileUtil.readLink`) per
+  *    call — FileContext's rename asks it for the source and the
+  *    destination of every rename, `.crc` sidecars included, so each
+  *    streaming checkpoint file paid four;
+  *  - `DeprecatedRawLocalFileStatus.loadPermissionInfo` forks `ls -ld`
+  *    when a status's owner/group/permission is first read. Not
+  *    overridden: no per-epoch or per-commit path reads them.
+  *
+  * The first two are overridden with identical results:
+  *  - `setPermission` applies the same 9 permission bits via
+  *    `Files.setPosixFilePermissions`. Bits NIO cannot express (sticky/
+  *    setuid/setgid) fall back to the parent's shell path — loglake
+  *    never sets them, so the fallback is dead in practice but keeps
+  *    the override exactly as capable as what it replaces.
+  *  - `getFileLinkStatus` answers a path that is not a symlink with
+  *    `getFileStatus`, which is what the parent returns once `readlink`
+  *    comes back empty; symlinks (dangling ones too) still go to the
+  *    parent, so link semantics are unchanged.
+  *
+  * Hadoop has two client APIs, and each resolves `file:` through its
+  * own key, both registered by [[NioLocalFileSystem.register]]:
+  *  - FileSystem (`fs.file.impl`) → [[NioLocalFileSystem]]: parquet
+  *    writers, committers, scans and the table formats' metadata I/O;
+  *  - FileContext (`fs.AbstractFileSystem.file.impl`) → [[NioLocalFs]]:
+  *    Spark's streaming checkpoints (offset log, commit log, state
+  *    store files).
   */
 final class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, perm: FsPermission): Unit = {
@@ -41,10 +65,45 @@ final class NioRawLocalFileSystem extends RawLocalFileSystem {
       ()
     }
   }
+
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (java.nio.file.Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }
 
-/** The `fs.file.impl` registration point: LocalFileSystem's checksum
-  * layer over the fork-free raw FS. Wired in [[graft.Sessions]]
-  * (Spark's hadoop conf — parquet writers, committers, scans) and
-  * [[WireLog.fs]] (the table formats' direct metadata I/O). */
+/** FileSystem API: LocalFileSystem's checksum layer over the fork-free
+  * raw FS. */
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+object NioLocalFileSystem {
+
+  /** The Hadoop conf keys that route `file:` to the fork-free stack,
+    * one per client API. The Spark session ([[graft.Sessions]]) and the
+    * shared table-format conf ([[WireLog.sharedConf]]) both apply
+    * exactly these, so the two cannot drift. */
+  val impls: Seq[(String, String)] = Seq(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
+  def register(conf: Configuration): Configuration = {
+    impls.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+}
+
+/** FileContext API: Hadoop's `LocalFs` stack — `ChecksumFs` over a
+  * `DelegateToFileSystem` — with only the raw FS swapped. FileContext
+  * instantiates it through this (URI, Configuration) constructor; like
+  * `LocalFs`, it binds to `file:///` whatever URI it is given. */
+class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(conf))
+
+/** `RawLocalFs` over [[NioRawLocalFileSystem]]; the overrides repeat
+  * `RawLocalFs`'s own (its constructor is package-private). */
+private[sources] final class NioRawLocalFs(conf: Configuration)
+    extends DelegateToFileSystem(FsConstants.LOCAL_FS_URI, new NioRawLocalFileSystem, conf,
+      FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults()
+  override def getServerDefaults(): FsServerDefaults = LocalConfigKeys.getServerDefaults()
+  override def isValidName(src: String): Boolean = true
+}

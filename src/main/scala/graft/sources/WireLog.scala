@@ -60,14 +60,11 @@ object WireLog {
     * commit/snapshot because fs() constructed a conf per call). The conf
     * is never mutated after construction; executors referencing it build
     * one lazily per JVM. */
-  lazy val sharedConf: Configuration = {
-    val conf = new Configuration()
-    // fork-free local chmod (see NioLocalFileSystem); FileSystem.get
-    // caches per scheme, so this also standardizes which impl every
-    // later caller of file:// receives in-process
-    conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
-    conf
-  }
+  lazy val sharedConf: Configuration =
+    // fork-free file:// for FileSystem and FileContext alike (see
+    // NioLocalFileSystem); FileSystem.get caches per scheme, so this
+    // also standardizes which impl every later in-process caller gets
+    NioLocalFileSystem.register(new Configuration())
 
   def fs(dir: String): FileSystem = new Path(dir).getFileSystem(sharedConf)
 

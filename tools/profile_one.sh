@@ -3,7 +3,10 @@
 # attribute wall time per job/description with tools/evlog.py.
 #
 # Usage: tools/profile_one.sh <q1[,q2,...]> [tag] [iters]
-# Writes tools/solo_out/<tag>.json and /tmp/evlog/<app-id> event logs.
+# Writes tools/solo_out/<tag>.json and /tmp/evlog/<app-id> event logs:
+# one plain-text JSON-lines file per app (Spark 4's default is a rolling,
+# zstd-compressed eventlog_v2_* directory, which evlog.py/evgaps.py
+# cannot read).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -32,4 +35,6 @@ java $ADDOPENS -Xmx24g -XX:ReservedCodeCacheSize=1g \
   -Dspark.ui.enabled=false \
   -Dspark.eventLog.enabled=true \
   -Dspark.eventLog.dir=file:///tmp/evlog \
+  -Dspark.eventLog.rolling.enabled=false \
+  -Dspark.eventLog.compress=false \
   -cp "$CP" graft.Bench 2>/dev/null | tail -1
