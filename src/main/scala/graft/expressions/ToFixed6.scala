@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{DataType, Decimal, DoubleType, LongType}
   * first rounding them to 6 decimal places the way a decimal cast does
   * (see [[graft.functions.Det.dsum]]). Spark's double→decimal cast goes
   * through `Double.toString` + BigDecimal per row — measured ~60% of an
-  * entire 4-sum aggregation's runtime at sf0.1 (`graft.tools.AggProbe`).
+  * entire 4-sum aggregation's runtime at sf0.1 (BASELINE.md, round 2:
+  * decimal sum 1.6 s → 0.38 s on the 4-sum q01 shape; the probe that
+  * measured it is in commit 3829a07 under `src/main/scala/graft/tools`).
   * This expression gets the identical result with primitive arithmetic:
   *
   *  - FAST PATH: `p = x·10⁶` rounds to nearest unless `p` lies within a

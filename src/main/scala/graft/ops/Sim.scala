@@ -158,19 +158,17 @@ object Sim {
   }
 
   /** The PERSISTED-INDEX forms of the q40 pipeline (round 16, q160):
-    * (doc_id, band, sig) band-bucket rows and (doc_id, sig array)
-    * signatures from a shingle frame. The hash parameters (HashA/
+    * (doc_id, band, sig) band-bucket rows here and (doc_id, sig array)
+    * signatures in [[sigArrayOfSigs]]. The hash parameters (HashA/
     * HashB/P/K/BandRows) are object constants, so signatures are
     * FROZEN BY CONSTRUCTION — maintaining an appended delta is a
     * pointwise per-doc computation that cannot drift from the base
-    * build. Shared with [[graft.ops.AnnLake]]'s q160. */
-  private[graft] def minhashBandRows(sh: org.apache.spark.sql.DataFrame) =
-    bandRowsOfSigs(minhashSignatures(sh))
-
-  /** band rows from an ALREADY-COMPUTED wide signature frame — lets a
-    * caller that needs bands AND the signature array (q160/q163 index
-    * builds) persist one signature aggregation instead of running the
-    * shingle+min-agg lineage once per derived table */
+    * build. Shared with [[graft.ops.AnnLake]]'s q160.
+    *
+    * Takes an ALREADY-COMPUTED wide signature frame — lets a caller
+    * that needs bands AND the signature array (q160/q163 index builds)
+    * persist one signature aggregation instead of running the
+    * shingle+min-agg lineage once per derived table. */
   private[graft] def bandRowsOfSigs(minsig: org.apache.spark.sql.DataFrame) = {
     val bandStructs = (0 until NBands).map { b =>
       val sig = concat_ws(",",
@@ -181,9 +179,6 @@ object Sim {
       .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
-
-  private[graft] def minhashSigArray(sh: org.apache.spark.sql.DataFrame) =
-    sigArrayOfSigs(minhashSignatures(sh))
 
   /** signature-array projection of an already-computed wide signature
     * frame (see [[bandRowsOfSigs]]) */

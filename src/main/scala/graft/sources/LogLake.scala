@@ -2897,6 +2897,46 @@ object LogLake {
     ()
   }
 
+  /** The files of the table that contain at least one of `keys` — the
+    * MERGE file discovery [[merge]] and [[mergeClauses]] share.
+    * Candidate prune BEFORE the discovery scan: the keys' min/max
+    * envelope skips files by manifest stats (Delta's merge
+    * file-pruning) — distributed under the planning opt-in, in-memory
+    * otherwise — and bucketed layouts additionally bound candidates to
+    * the keys' buckets on BOTH paths. The survivors are then scanned
+    * once with a `_metadata.file_path` semi-join against the keys;
+    * driver contact is a file-name list. */
+  private def keyTouchedFiles(spark: SparkSession, dir: String,
+      disc: Discovery, schema: StructType, keys: DataFrame,
+      keyCols: Seq[String]): Seq[AddFile] = {
+    val candidates = keyEnvelope(keys, keyCols, schema) match {
+      case None => Nil // no non-null source key: nothing can match
+      case Some(cs) => disc.plan match {
+        case Some(_) =>
+          // bucketed layouts bound candidates to the keys' buckets on
+          // the DISTRIBUTED path too (round 15) — the id set rides the
+          // skipping-job closure; tags trusted only when the policy
+          // footers + tail prove every active file is tagged (ADVICE r15)
+          keyBucketIds(dir, schema, keys, keyCols) match {
+            case Some(ids) if disc.bucketTagsTrusted =>
+              disc.candidatesWhere(cs, bucketIdKeep(ids))
+            case _ => disc.candidates(cs)
+          }
+        case None => bucketPruneForKeys(dir, disc.eager._1, schema,
+          keys, keyCols).filter(constraintsKeep(cs, _))
+      }
+    }
+    if (candidates.isEmpty) return Nil
+    val names = scanLogical(spark, schema,
+      candidates.map(a => resolvedPath(dir, a.path)),
+      Seq(col("_metadata.file_path") -> "__file"))
+      .select(keyCols.map(col) :+ col("__file"): _*)
+      .join(keys, keyCols, "leftsemi")
+      .select("__file").distinct().collect()
+      .map(r => new Path(r.getString(0)).getName).toSet
+    candidates.filter(a => names(new Path(a.path).getName))
+  }
+
   /** MERGE upsert (WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT
     * *): target rows whose key appears in `source` are replaced by the
     * source row; unmatched source rows are inserted. Only the files
@@ -2934,40 +2974,7 @@ object LogLake {
     val keys = src.select(keyCols.map(col).toIndexedSeq: _*).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // candidate prune BEFORE the discovery scan: the source keys'
-    // min/max envelope skips files by manifest stats (Delta's merge
-    // file-pruning) — distributed under the planning opt-in, in-memory
-    // otherwise — and bucketed layouts additionally bound candidates
-    // to the keys' buckets
-    val candidates = keyEnvelope(keys, keyCols, schema) match {
-      case None => Nil // no non-null source key: nothing can match
-      case Some(cs) => disc.plan match {
-        case Some(_) =>
-          // bucketed layouts bound candidates to the keys' buckets on
-          // the DISTRIBUTED path too (round 15) — the id set rides the
-          // skipping-job closure; tags trusted only when the policy
-          // footers + tail prove every active file is tagged (ADVICE r15)
-          keyBucketIds(dir, schema, keys, keyCols) match {
-            case Some(ids) if disc.bucketTagsTrusted =>
-              disc.candidatesWhere(cs, bucketIdKeep(ids))
-            case _ => disc.candidates(cs)
-          }
-        case None => bucketPruneForKeys(dir, disc.eager._1, schema,
-          keys, keyCols).filter(constraintsKeep(cs, _))
-      }
-    }
-    val touchedNames: Set[String] =
-      if (candidates.isEmpty) Set.empty
-      else {
-        val tgt = scanLogical(spark, schema,
-          candidates.map(a => resolvedPath(dir, a.path)),
-          Seq(col("_metadata.file_path") -> "__file"))
-          .select(keyCols.map(col) :+ col("__file"): _*)
-        tgt.join(keys, keyCols, "leftsemi")
-          .select("__file").distinct().collect()
-          .map(r => new Path(r.getString(0)).getName).toSet
-      }
-    val touched = candidates.filter(a => touchedNames(new Path(a.path).getName))
+    val touched = keyTouchedFiles(spark, dir, disc, schema, keys, keyCols)
     // stats-column inheritance reads the BROAD basis (manifest tail +
     // one sampled record per checkpoint part), never the pruned
     // candidates — an insert-only merge whose envelope prune empties
@@ -3146,37 +3153,7 @@ object LogLake {
     // persisted for the same reasons as [[merge]]'s key set
     val keys = src.select(keyCols.map(col).toIndexedSeq: _*).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // files containing a matching key — [[merge]]'s candidate prune
-    // (key envelope, distributed under the opt-in; bucket-bounded on
-    // BOTH paths when the layout allows), then the discovery scan
-    val keyCandidates: Seq[AddFile] =
-      if (matchedCls.isEmpty && insertCls.isEmpty && nmbsCls.isEmpty) Nil
-      else keyEnvelope(keys, keyCols, schema) match {
-        case None => Nil // no non-null source key: nothing can match
-        case Some(cs) => disc.plan match {
-          case Some(_) =>
-            keyBucketIds(dir, schema, keys, keyCols) match {
-              // tags trusted only when the policy footers + tail prove
-              // every active file is tagged (ADVICE r15)
-              case Some(ids) if disc.bucketTagsTrusted =>
-                disc.candidatesWhere(cs, bucketIdKeep(ids))
-              case _ => disc.candidates(cs)
-            }
-          case None => bucketPruneForKeys(dir, disc.eager._1, schema,
-            keys, keyCols).filter(constraintsKeep(cs, _))
-        }
-      }
-    val keyTouchedNames: Set[String] =
-      if (keyCandidates.isEmpty) Set.empty
-      else {
-        val tgt = scanLogical(spark, schema,
-          keyCandidates.map(a => resolvedPath(dir, a.path)),
-          Seq(col("_metadata.file_path") -> "__file"))
-          .select(keyCols.map(col) :+ col("__file"): _*)
-        tgt.join(keys, keyCols, "leftsemi")
-          .select("__file").distinct().collect()
-          .map(r => new Path(r.getString(0)).getName).toSet
-      }
+    val keyTouched = keyTouchedFiles(spark, dir, disc, schema, keys, keyCols)
     // NOT MATCHED BY SOURCE reaches rows no source key selects, so its
     // file scope is the clause conditions' (target-column) disjunction
     // — an unconditional clause means every file (inherent to its
@@ -3197,8 +3174,6 @@ object LogLake {
             disc.candidates(conditionConstraints(schema, disj)), schema, disj)
         }
       }
-    val keyTouched = keyCandidates.filter(a =>
-      keyTouchedNames(new Path(a.path).getName))
     val touched = (keyTouched ++ nmbsTouched).distinctBy(_.path)
     // broad basis, not the pruned candidates — see [[Discovery.statsKeys]]
     val statsKeys0 = disc.statsKeys
@@ -3317,26 +3292,21 @@ object LogLake {
                 vals.getOrElse(f.name, lit(null))
                   .cast(f.dataType).as(f.name)): _*)
           val none = array().cast(chgType)
-          def walkChg(cs: Seq[(Option[Column], Column)], default: Column): Column =
-            cs.foldRight(default) { case ((cond, out), rest) =>
-              cond.map(c => when(coalesce(c, lit(false)), out).otherwise(rest))
-                .getOrElse(out)
-            }
-          val matchedChg = walkChg(matchedCls.map {
+          val matchedChg = walk(matchedCls.map {
             case MatchedUpdate(c, set) => c -> array(
               chg("update_preimage", Map.empty), chg("update_postimage", set))
             case MatchedDelete(c) => c -> array(chg("delete", Map.empty))
             case other => throw new IllegalStateException(
               s"loglake: non-MATCHED clause in the matched set: $other")
           }, none)
-          val nmbsChg = walkChg(nmbsCls.map {
+          val nmbsChg = walk(nmbsCls.map {
             case NotMatchedBySourceUpdate(c, set) => c -> array(
               chg("update_preimage", Map.empty), chg("update_postimage", set))
             case NotMatchedBySourceDelete(c) => c -> array(chg("delete", Map.empty))
             case other => throw new IllegalStateException(
               s"loglake: unexpected clause in the not-matched-by-source set: $other")
           }, none)
-          val insertChg = walkChg(insertCls.map {
+          val insertChg = walk(insertCls.map {
             case NotMatchedInsert(c, values) =>
               c -> array(chgNew("insert", values))
           }, none)
@@ -6196,12 +6166,6 @@ object LogLake {
     * header. A reader uses the group only when all n parts exist, so
     * partial visibility mid-write or mid-sweep degrades to the
     * previous checkpoint, never to a torn state. */
-  /** Probe hook ([[graft.tools.BigMetaProbe]]): force a checkpoint at
-    * `v` outside the commit cadence, through the same best-effort path
-    * commits take (distributed when the table opted in). */
-  private[graft] def forceCheckpoint(dir: String, v: Long): Unit =
-    writeCheckpoint(dir, v)
-
   private def writeCheckpoint(dir: String, v: Long): Unit =
     try {
       val f = fs(dir)

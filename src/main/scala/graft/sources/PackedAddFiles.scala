@@ -136,9 +136,6 @@ final class PackedAddFiles private[sources] (
     appended.foreach(out += _)
     out.result()
   }
-
-  /** Compressed footprint, for probes/specs. */
-  def packedBytes: Long = blocks.iterator.map(_.length.toLong).sum
 }
 
 object PackedAddFiles {
@@ -193,7 +190,6 @@ object PackedAddFiles {
       writeVarLong(b.length.toLong); write(b, 0, b.length)
     }
     def raw: Array[Byte] = super.toByteArray
-    def sizeNow: Int = super.size()
   }
 
   private def writeAdd(w: Writer, a: AddFile): Unit = {

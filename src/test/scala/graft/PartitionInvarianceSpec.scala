@@ -7,7 +7,9 @@ package graft
   * (exact decimal sums, total ORDER BY, engine-stable hashing) exists
   * to provide — checked here on the queries whose shapes are most
   * partition-sensitive: salted aggregation, window sorts, iterative
-  * label propagation, max_by compaction, exact statistics.
+  * label propagation, max_by compaction, exact statistics. The same
+  * holds for memory pressure: a window or join whose buffers spill to
+  * disk must return the rows it returns in memory.
   */
 class PartitionInvarianceSpec extends SparkTestBase {
 
@@ -36,5 +38,46 @@ class PartitionInvarianceSpec extends SparkTestBase {
           s"(first diff: ${ra.zip(rb).find(p => p._1 != p._2)})")
       assert(ra.nonEmpty, s"$name returned no rows — vacuous invariance")
     }
+  }
+
+  /** The window and join shapes among [[sensitive]]: the operators
+    * whose buffers spill to disk when a group outgrows memory. */
+  private val spillPaths = Seq("q49_percentile_disc", "q96_percentile_cont",
+    "q105_mad_outliers", "q87_salted_join", "q90_scd2_merge")
+
+  test("window and join queries return the same rows when forced to spill") {
+    // The window / sort-merge-join buffers hold rows in memory up to
+    // the in-memory threshold and hand them to an external sorter past
+    // it; at sf0.001 no group reaches Spark's default of 4096, so both
+    // thresholds are lowered until the external-sort path runs. The
+    // listener proves it ran: a forced run that spills nothing would
+    // make the comparison vacuous.
+    val spilled = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null)
+          spilled.addAndGet(te.taskMetrics.memoryBytesSpilled +
+            te.taskMetrics.diskBytesSpilled)
+    }
+    val forced = Sessions.derived(spark,
+      "spark.sql.windowExec.buffer.in.memory.threshold" -> "64",
+      "spark.sql.windowExec.buffer.spill.threshold" -> "256",
+      "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "64",
+      "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "256",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "16")
+    val base = spillPaths.map(name => SparkEntry.queries(name)(spark, sfDir).collect().toSeq)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spillPaths.zip(base).foreach { case (name, rows) =>
+        val got = SparkEntry.queries(name)(forced, sfDir).collect().toSeq
+        assert(got == rows,
+          s"$name differs under forced spills " +
+            s"(first diff: ${rows.zip(got).find(p => p._1 != p._2)})")
+      }
+      // task-end events reach the listener asynchronously
+      val deadline = System.nanoTime() + 20000000000L
+      while (spilled.get() == 0L && System.nanoTime() < deadline) Thread.sleep(200)
+      assert(spilled.get() > 0L, "the forced run spilled nothing — vacuous comparison")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
